@@ -101,11 +101,12 @@ SCALING_BUDGET_S = float(os.environ.get("SPARK_GRAFT_BUDGET_S", "1800"))
 MIN_ROUNDS = 3
 # fixed across the SCALING PAIR so per-task work is identical.  16 tasks
 # of ~500K turns: the (1->4) ratio's measured non-scaling tail is the
-# partial-blob result ship plus per-task turnaround (tools/xp_tail.py:
-# full - build_only ~= 1.2 s at the hi level at 64 parts, while the
-# driver-side merge itself is 0.06 s), and both scale with the TASK
-# COUNT at fixed total work — tools/xp_ship.py measured 16 parts ~10%
-# faster than 32 at BOTH levels (interleaved same-window passes), with
+# partial-blob result ship plus per-task turnaround
+# (`git show bebf5f2:tools/xp_tail.py`: full - build_only ~= 1.2 s at the hi
+# level at 64 parts, while the driver-side merge itself is 0.06 s), and
+# both scale with the TASK COUNT at fixed total work —
+# `git show bebf5f2:tools/xp_ship.py` measured 16 parts ~10% faster
+# than 32 at BOTH levels (interleaved same-window passes), with
 # local[4] still getting 4 uniform waves for load balance and the bloom
 # partial ship halved to ~15 MB.  The one-shot throughput-table children
 # above the pair (8, 32 cores) scale their partitioning with their core
@@ -195,10 +196,11 @@ def _session(cores: int, arrow_batch: int = 131072):
             # writer blocks mid-batch whenever the worker is busy, so the
             # two sides of each task's pipeline alternate instead of
             # overlapping; 1 MiB holds 2-3 batches of run-ahead.
-            # Measured (tools/xp_hiknobs.py, pinned local[4], 16M turns):
-            # identity crossing 5.57 s -> 4.83 s (-13%%); the crossing is
-            # the build's non-scaling term (tools/xp_decomp.py: scan
-            # scales 0.90, crossing 0.47), so this feeds the (1->4)
+            # Measured (`git show bebf5f2:tools/xp_hiknobs.py`, pinned
+            # local[4], 16M turns): identity crossing 5.57 s -> 4.83 s
+            # (-13%%); the crossing is the build's non-scaling term
+            # (`git show bebf5f2:tools/xp_decomp.py`: scan scales 0.90,
+            # crossing 0.47), so this feeds the (1->4)
             # efficiency directly.
             .config("spark.buffer.size", str(1 << 20))
             .config("spark.driver.memory", "48g")
@@ -232,7 +234,8 @@ def _build_specs(n_turns: int):
     # worker-side from the conv_id and tool hashes the sibling sketches
     # already cross, so the whole 4-sketch build ships THREE hash/value
     # columns instead of four — the JVM row->Arrow serializer is the
-    # build's dominant per-value cost (tools/xp_arrow_identity.py).
+    # build's dominant per-value cost
+    # (`git show bebf5f2:tools/xp_arrow_identity.py`).
     return {
         "hll_conv": (HLLSpec(p=14), ["conv_id"]),
         "bloom_conv_tool": (MixKeyBloomSpec(bloom_shape),
@@ -282,10 +285,11 @@ def _child_build(cores: int) -> None:
     specs = _build_specs(N_TURNS)
     # ROUND-5 STRUCTURAL FIX: no raw row ever crosses the Arrow boundary.
     # The JVM row->Arrow serializer is the build's dominant and
-    # worst-scaling term (tools/xp_serializer_cpu.py: its per-value work
-    # inflates ~2.2x in CPU-seconds under 4-way concurrency on this
-    # shared-bus box; every per-value knob A/B'd dead) — so the fix is
-    # STRUCTURAL: cross fewer values.  Two sub-jobs per pass:
+    # worst-scaling term (`git show bebf5f2:tools/xp_serializer_cpu.py`: its
+    # per-value work inflates ~2.2x in CPU-seconds under 4-way
+    # concurrency on this shared-bus box; every per-value knob A/B'd
+    # dead) — so the fix is STRUCTURAL: cross fewer values.  Two
+    # sub-jobs per pass:
     #
     # 1. The idempotent/additive trio (HLL distinct-conv, Bloom
     #    (conv,tool), CMS tool-counts) goes through the PRE-REDUCED
@@ -294,7 +298,8 @@ def _child_build(cores: int) -> None:
     #    only the ~1M-row distinct stream (+ multiplicities) crosses
     #    instead of 8M raw rows x 3 columns.  Sketch bytes are IDENTICAL
     #    to the raw path (tests/test_prereduce.py); measured scaling of
-    #    this sub-job alone: 0.85 at (1->4) (tools/xp_split.py).
+    #    this sub-job alone: 0.85 at (1->4)
+    #    (`git show bebf5f2:tools/xp_split.py`).
     #
     # 2. The value sketch measures the CONVERSATION-LENGTH distribution
     #    (KLL over groupBy(conv_id).count() — the transcript analytics
@@ -305,8 +310,9 @@ def _child_build(cores: int) -> None:
     #    makes the post-shuffle value order — and hence the KLL bytes —
     #    run-to-run deterministic without feeding the compactor a
     #    sorted-by-value stream.  (A raw per-turn KLL over a near-unique
-    #    column remains fully supported — tools/xp_klljob.py measures
-    #    it: identity-crossing-bound, 6.0 s at lo — but quantiles of a
+    #    column remains fully supported —
+    #    `git show bebf5f2:tools/xp_klljob.py` measures it:
+    #    identity-crossing-bound, 6.0 s at lo — but quantiles of a
     #    uniform hash are not an analytics target; conversation length
     #    is.)
     red = {n: s for n, s in specs.items() if s[0].REDUCE is not None}
@@ -772,7 +778,8 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
                 f"the KLL input is itself the groupBy(conv_id).count() "
                 f"aggregate — NO raw row ever crosses the row->Arrow "
                 f"serializer, the build's dominant and worst-scaling "
-                f"term (tools/xp_serializer_cpu.py, xp_klljob.py).\n"
+                f"term (`git show bebf5f2:tools/xp_serializer_cpu.py`, "
+                f"`git show bebf5f2:tools/xp_klljob.py`).\n"
                 f"Query suite input: {SF_DIR}.\n\n")
         f.write("## Protocol (round 5)\n\n")
         f.write(
@@ -803,7 +810,8 @@ def _write_bench_md(queries, query_steal, qrec, thr, scaling, rounds,
             "no-Spark calibration is pinned identically "
             "(sched_setaffinity before the pool fork).  Host topology "
             "verified flat: 32 vCPUs, 1 thread/core, 1 NUMA node.\n\n"
-            "SHIP-VOLUME FIXES (tools/xp_tail.py decomposition: the "
+            "SHIP-VOLUME FIXES (`git show bebf5f2:tools/xp_tail.py` "
+            "decomposition: the "
             "job's non-scaling tail is the partial-blob result ship "
             "plus driver-side per-task costs, NOT the driver merge — "
             "0.06 s): CMS partials now auto-select a sparse (index, "

@@ -10,11 +10,16 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
   crossing is the build's measured scaling bottleneck (BENCH.md) and
   hash bytes are its payload.  Python only does closed-form EDH
   arithmetic on whole Arrow batches.  No per-row Python.
-- **Partial aggregation.** ``pandas_udf(GROUPED_AGG)`` has no map-side
-  combine, so global sketches are built with ``mapInPandas`` — ONE sketch row
-  per input partition, built fully vectorized — then merged with
-  ``rdd.treeAggregate`` (depth ~ log4(P)).  Raw rows never shuffle; only
-  KB-MB sketch blobs do.
+- **One build path, one merge path.** ``pandas_udf(GROUPED_AGG)`` has no
+  map-side combine, so global sketches are built by
+  ``build_partials_multi`` — ONE ``mapInPandas`` row per input partition
+  carrying one blob per named sketch, built fully vectorized — and merged
+  by ``tree_aggregate_multi``: a driver fold in sorted-pid order, preceded
+  by executor tree rounds (``tree_merge_round``) only when the partials
+  exceed the collect budget.  The single-sketch API (``build_partials``,
+  ``tree_aggregate``, ``sketch_dataframe``) is the same engine with one
+  sketch named ``"sketch"``.  Raw rows never shuffle; only KB-MB sketch
+  blobs do.
 - **Grouped aggregation** has two physical paths: ``grouped_sketch`` is
   two-phase ``applyInPandas`` ((group, salt) -> partial, then group ->
   merge) for low-cardinality groups; ``grouped_sketch_segmented`` builds
@@ -25,8 +30,8 @@ Execution design (SURVEY.md §4, BASELINE.json north_rule):
 - **Byte-identical associativity.** OR/sum/max/min-merge kinds (bloom,
   counting, layered, HLL, CMS, bottom-k, minhash) produce byte-identical
   results for ANY partitioning / merge order.  KLL and t-digest are
-  deterministic given a fixed partitioning; pass ``canonical=True`` to merge
-  partials in sorted-partition order for run-to-run reproducibility.
+  deterministic given a fixed partitioning: every merge folds partials in
+  sorted-partition order, so runs over the same partitioning reproduce.
 - **Skew.** Hot groups are split by a salt derived from the item hash
   (``pmod(h1, salt)``), merged in a second, tiny shuffle.
 """
@@ -118,7 +123,8 @@ class SketchSpec:
     # prepare() emits (KLL/TDigest read only the value column; the h1 the
     # base class emits for them is pure Arrow-crossing waste — the JVM
     # row->Arrow serializer is the build's dominant per-value cost, see
-    # tools/xp_serializer_cpu.py).  None = all emitted columns are used.
+    # `git show bebf5f2:tools/xp_serializer_cpu.py`).  None = all emitted
+    # columns are used.
     USED_BATCH_COLS: ClassVar[tuple[str, ...] | None] = None
 
     # How this sketch's update commutes with a JVM-side pre-aggregation of
@@ -197,7 +203,8 @@ class MixKeyBloomSpec(SketchSpec):
     individual columns: build_partials_multi's structural dedup then
     projects each source column's hash ONCE, and the composite never
     crosses the Arrow boundary at all — the JVM row->Arrow serializer is
-    the build's dominant per-value cost (tools/xp_arrow_identity.py), so
+    the build's dominant per-value cost
+    (`git show bebf5f2:tools/xp_arrow_identity.py`), so
     at 100 TB one fewer crossed column is material.  The key universe
     differs from BloomSpec's (different composite hash function), so pick
     one spec per filter and stay with it; membership probes go through
@@ -370,46 +377,134 @@ class LayeredBloomSpec(SketchSpec):
 
 
 # --------------------------------------------------------------------------
-# Global (ungrouped) aggregation: mapInPandas partials + treeAggregate
+# Global (ungrouped) aggregation: one scan, one Arrow crossing, N sketches
+# per mapInPandas partial row; merged by a sorted-pid fold
 # --------------------------------------------------------------------------
 
-def _partial_builder(spec: SketchSpec):
+def _multi_schema(names: Sequence[str]) -> str:
+    return ", ".join(["pid long", *(f"`{n}` binary" for n in names),
+                      "rows long"])
+
+
+def build_partials_multi(
+        df: DataFrame,
+        specs: dict[str, tuple[SketchSpec, Sequence[str | Column]]],
+        prereduce: bool = False,
+) -> DataFrame:
+    """Build several sketches (possibly over different key columns) in ONE
+    pass over the data: all hash/value columns are computed JVM-side in a
+    single projection, the batch crosses the Arrow boundary once, and every
+    sketch updates from the same batch.  At 100 TB this turns N scans into
+    one — the scan is the cost; the sketch updates are cheap NumPy.
+
+    Output: one row per input partition (empty partitions included),
+    ``pid long, <name> binary ..., rows long`` (one binary column per spec;
+    one spec named ``sketch`` gives ``PARTIAL_SCHEMA``).
+
+    Specs that prepare IDENTICAL expressions (e.g. an HLL and a KLL both
+    keyed on ``xxhash64(conv_id)``) share ONE projected column: the hash is
+    computed once JVM-side and crosses the Arrow boundary once — at 100 TB
+    the crossing is the build's dominant cost (measured ~90%% of
+    over-scan time, tools/profile_build.py), so duplicate columns are
+    pure waste.
+
+    ``prereduce=True`` inserts a JVM-side partial aggregation BEFORE the
+    Arrow crossing: the prepared hash columns are grouped
+    (``groupBy(*hashes).count()`` — Tungsten hash-agg with map-side
+    combine) and only one row per DISTINCT key tuple crosses, carrying its
+    raw multiplicity in ``__cnt``.  Sound for every spec whose REDUCE is
+    "distinct" (idempotent insert: identical bytes from the distinct set)
+    or "weighted" (additive cells: identical bytes from count-weighted
+    updates); raises for order/sequence-dependent or value-carrying specs.
+    When keys repeat (conversations × tools at transcript scale), this
+    shrinks the crossing — the build's measured dominant per-value cost
+    (`git show bebf5f2:tools/xp_serializer_cpu.py`) — by the
+    key-repetition factor, and the worker-side scatter kernels with it.
+    The added exchange moves only the already-combined distinct stream.
+    The partial count follows the shuffle partitioning, so pass the
+    session's shuffle partition count as ``est_parts`` to the merge."""
+    names = list(specs)
+    if prereduce:
+        for name, (spec, _) in specs.items():
+            if spec.REDUCE is None:
+                raise ValueError(
+                    f"spec {name!r} ({type(spec).__name__}) is not "
+                    "pre-reducible: REDUCE is None (order-dependent or "
+                    "value-carrying) — build it on the raw path")
+    exprs: list[Column] = []
+    # structural expr key -> canonical projected column name (ADVICE r04:
+    # keys come from prepare_keyed_exprs, never from parsing the JVM
+    # expression string — Connect-safe and immune to ' AS ' in names)
+    seen: dict[tuple, str] = {}
+    # spec name -> {batch col (h1/value/layer) -> projected column name}
+    canon: dict[str, dict[str, str]] = {}
+    for name, (spec, cols) in specs.items():
+        canon[name] = {}
+        used = spec.USED_BATCH_COLS
+        for batch_col, expr_key, c in spec.prepare_keyed_exprs(
+                cols, prefix=f"{name}__"):
+            if used is not None and batch_col not in used:
+                continue  # update() never reads it: don't cross it
+            out_name = f"{name}__{batch_col}"
+            if expr_key in seen:
+                canon[name][batch_col] = seen[expr_key]
+            else:
+                seen[expr_key] = out_name
+                canon[name][batch_col] = out_name
+                exprs.append(c)
+    prepared = df.select(*exprs)
+    if prereduce:
+        key_names = list(seen.values())
+        prepared = (prepared.groupBy(*key_names)
+                    .agg(F.count(F.lit(1)).alias("__cnt")))
+        for n in names:
+            canon[n]["_cnt"] = "__cnt"
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
-        sk = spec.empty()
+        sks = {n: specs[n][0].empty() for n in names}
         rows = 0
         for pdf in batches:
-            if len(pdf):
-                spec.update(sk, pdf)
-                rows += len(pdf)
+            if not len(pdf):
+                continue
+            # "rows" records RAW rows processed, not crossed rows
+            rows += int(pdf["__cnt"].sum()) if prereduce else len(pdf)
+            for n in names:
+                spec = specs[n][0]
+                # built per batch col, not renamed: two batch cols of one
+                # spec may share a projected column (MixKey over ["k", "k"])
+                sub = pd.DataFrame({bc: pdf[src]
+                                    for bc, src in canon[n].items()},
+                                   copy=False)
+                if prereduce:
+                    spec.update_reduced(sks[n], sub)
+                else:
+                    spec.update(sks[n], sub)
         pid = TaskContext.get().partitionId()
-        yield pd.DataFrame({"pid": [pid], "sketch": [sk.to_bytes()],
+        yield pd.DataFrame({"pid": [pid],
+                            **{n: [sks[n].to_bytes()] for n in names},
                             "rows": [rows]})
-    return fn
+
+    return prepared.mapInPandas(fn, schema=_multi_schema(names))
 
 
-def build_partials(df: DataFrame, spec: SketchSpec,
-                   cols: Sequence[str | Column]) -> DataFrame:
-    """One sketch row per input partition (the map-side combine the pandas
-    UDAF API lacks).  Output: DataFrame[pid, sketch, rows]."""
-    return spec.prepare(df, cols).mapInPandas(
-        _partial_builder(spec), schema=PARTIAL_SCHEMA)
-
-
-def tree_merge_round(partials: DataFrame, fanout: int = 64) -> DataFrame:
-    """One tree round: fold groups of ``fanout`` partial rows (by pid range,
-    sorted within the group for canonical determinism) into one row each.
-    Shuffles only sketch-sized rows; raw data is long gone."""
+def tree_merge_round(partials: DataFrame, names: Sequence[str],
+                     fanout: int = 64) -> DataFrame:
+    """One parallel tree round over a partials frame: fold groups of
+    ``fanout`` rows (by pid range, sorted by pid within each group —
+    canonical) into one row per group, per sketch column.  Shuffles only
+    sketch-sized rows; raw data is long gone."""
 
     def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("pid")
-        blob = merge_blob_list(bytes(b) for b in pdf["sketch"])
-        return pd.DataFrame({"pid": [int(key[0])], "sketch": [blob],
-                             "rows": [int(pdf["rows"].sum())]})
+        return pd.DataFrame({
+            "pid": [int(key[0])],
+            **{n: [merge_blob_list(bytes(b) for b in pdf[n])] for n in names},
+            "rows": [int(pdf["rows"].sum())]})
 
     grouped = partials.withColumn(
         "_g", (F.col("pid") / F.lit(fanout)).cast("long"))
-    return grouped.groupBy("_g").applyInPandas(fold, PARTIAL_SCHEMA)
+    return grouped.groupBy("_g").applyInPandas(fold, _multi_schema(names))
 
 
 def _collect_partials(partials: DataFrame) -> pd.DataFrame:
@@ -448,203 +543,37 @@ def _budgeted_collect_max(collect_max: int, blob_bytes: int | None) -> int:
     return max(min(collect_max, DRIVER_COLLECT_BUDGET // blob_bytes), 8)
 
 
-def tree_aggregate(partials: DataFrame, depth: int | None = None,
-                   canonical: bool = True, collect_max: int = 1024,
-                   fanout: int = 64,
-                   blob_bytes: int | None = None) -> bytes | None:
-    """Merge partial-sketch rows (one per input partition) to one blob.
-
-    Partials are fixed-size KB-MB sketches, so the dominant cost is the
-    build scan, never the merge — the merge plan only has to avoid fixed
-    overhead:
-
-    - ``<= collect_max`` partitions: collect the rows and fold driver-side
-      in sorted-pid order.  One job, no extra shuffle, no Python-RDD pickle
-      path.  Sorted order is canonical for every sketch kind and
-      byte-identical to any other order for the commutative kinds.
-    - more partitions (cluster scale): iterative DataFrame tree rounds —
-      ``groupBy(pid // fanout)`` -> ``applyInPandas`` fold — until
-      ``collect_max`` rows remain, then the driver fold.  This is the
-      treeAggregate pattern named by north_star, expressed over DataFrames
-      so blobs stay in Arrow and AQE places the (tiny) shuffles.
-
-    ``depth`` overrides the number of tree rounds; ``canonical`` is kept
-    for API compatibility (both paths are canonical now).  ``blob_bytes``
-    (a per-partial size hint, e.g. ``spec.est_bytes()``) additionally caps
-    the driver collect by total bytes, not just row count.
-    """
-    collect_max = _budgeted_collect_max(collect_max, blob_bytes)
-    est_parts = partials.rdd.getNumPartitions()
-    rounds = depth if depth is not None else 0
-    if depth is None:
-        while est_parts > collect_max:
-            rounds += 1
-            est_parts = int(np.ceil(est_parts / fanout))
-    for _ in range(rounds):
-        partials = tree_merge_round(partials, fanout)
-    pdf = _collect_partials(partials.select("pid", "sketch"))
-    return merge_blob_list(bytes(b) for b in pdf["sketch"])
-
-
-def sketch_dataframe(df: DataFrame, spec: SketchSpec,
-                     cols: Sequence[str | Column],
-                     canonical: bool = False) -> Sketch:
-    """Build + merge in one call; returns the deserialized final sketch."""
-    blob = tree_aggregate(build_partials(df, spec, cols), canonical=canonical,
-                          blob_bytes=spec.est_bytes())
-    if blob is None:
-        return spec.empty()
-    return sketch_from_bytes(blob)
-
-
-# --------------------------------------------------------------------------
-# Multi-sketch single-pass build: one scan, one Arrow crossing, N sketches
-# --------------------------------------------------------------------------
-
-def build_partials_multi(
-        df: DataFrame,
-        specs: dict[str, tuple[SketchSpec, Sequence[str | Column]]],
-        prereduce: bool = False,
-) -> DataFrame:
-    """Build several sketches (possibly over different key columns) in ONE
-    pass over the data: all hash/value columns are computed JVM-side in a
-    single projection, the batch crosses the Arrow boundary once, and every
-    sketch updates from the same batch.  At 100 TB this turns N scans into
-    one — the scan is the cost; the sketch updates are cheap NumPy.
-
-    Output: one row per input partition,
-    ``pid long, rows long, <name> binary ...`` (one binary column per spec).
-
-    Specs that prepare IDENTICAL expressions (e.g. an HLL and a KLL both
-    keyed on ``xxhash64(conv_id)``) share ONE projected column: the hash is
-    computed once JVM-side and crosses the Arrow boundary once — at 100 TB
-    the crossing is the build's dominant cost (measured ~90%% of
-    over-scan time, tools/profile_build.py), so duplicate columns are
-    pure waste.
-
-    ``prereduce=True`` inserts a JVM-side partial aggregation BEFORE the
-    Arrow crossing: the prepared hash columns are grouped
-    (``groupBy(*hashes).count()`` — Tungsten hash-agg with map-side
-    combine) and only one row per DISTINCT key tuple crosses, carrying its
-    raw multiplicity in ``__cnt``.  Sound for every spec whose REDUCE is
-    "distinct" (idempotent insert: identical bytes from the distinct set)
-    or "weighted" (additive cells: identical bytes from count-weighted
-    updates); raises for order/sequence-dependent or value-carrying specs.
-    When keys repeat (conversations × tools at transcript scale), this
-    shrinks the crossing — the build's measured dominant per-value cost
-    (tools/xp_serializer_cpu.py) — by the key-repetition factor, and the
-    worker-side scatter kernels with it.  The added exchange moves only
-    the already-combined distinct stream.  The partial count follows the
-    shuffle partitioning, so pass the session's shuffle partition count as
-    ``est_parts`` to the merge."""
-    names = list(specs)
-    if prereduce:
-        for name, (spec, _) in specs.items():
-            if spec.REDUCE is None:
-                raise ValueError(
-                    f"spec {name!r} ({type(spec).__name__}) is not "
-                    "pre-reducible: REDUCE is None (order-dependent or "
-                    "value-carrying) — build it on the raw path")
-    exprs: list[Column] = []
-    # structural expr key -> canonical projected column name (ADVICE r04:
-    # keys come from prepare_keyed_exprs, never from parsing the JVM
-    # expression string — Connect-safe and immune to ' AS ' in names)
-    seen: dict[tuple, str] = {}
-    # spec name -> {batch col (h1/value/layer) -> projected column name}
-    canon: dict[str, dict[str, str]] = {}
-    for name, (spec, cols) in specs.items():
-        canon[name] = {}
-        used = spec.USED_BATCH_COLS
-        for batch_col, expr_key, c in spec.prepare_keyed_exprs(
-                cols, prefix=f"{name}__"):
-            if used is not None and batch_col not in used:
-                continue  # update() never reads it: don't cross it
-            out_name = f"{name}__{batch_col}"
-            if expr_key in seen:
-                canon[name][batch_col] = seen[expr_key]
-            else:
-                seen[expr_key] = out_name
-                canon[name][batch_col] = out_name
-                exprs.append(c)
-    prepared = df.select(*exprs)
-    if prereduce:
-        key_names = list(seen.values())
-        prepared = (prepared.groupBy(*key_names)
-                    .agg(F.count(F.lit(1)).alias("__cnt")))
-        for n in names:
-            canon[n]["_cnt"] = "__cnt"
-    schema = ", ".join(["pid long", "rows long"]
-                       + [f"`{n}` binary" for n in names])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-        sks = {n: specs[n][0].empty() for n in names}
-        rows = 0
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # "rows" records RAW rows processed, not crossed rows
-            rows += int(pdf["__cnt"].sum()) if prereduce else len(pdf)
-            for n in names:
-                spec = specs[n][0]
-                sub = pdf.rename(columns={
-                    src: bc for bc, src in canon[n].items()})
-                if prereduce:
-                    spec.update_reduced(sks[n], sub)
-                else:
-                    spec.update(sks[n], sub)
-        pid = TaskContext.get().partitionId()
-        data = {"pid": [pid], "rows": [rows]}
-        for n in names:
-            data[n] = [sks[n].to_bytes()]
-        yield pd.DataFrame(data)
-
-    return prepared.mapInPandas(fn, schema=schema)
-
-
-def tree_merge_round_multi(partials: DataFrame, names: Sequence[str],
-                           fanout: int = 16) -> DataFrame:
-    """One parallel tree round over a multi-sketch partials frame: fold
-    groups of ``fanout`` rows (sorted by pid within each group — canonical)
-    into one row per group, per sketch column."""
-
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("pid")
-        data = {"pid": [int(key[0])], "rows": [int(pdf["rows"].sum())]}
-        for n in names:
-            data[n] = [merge_blob_list(bytes(b) for b in pdf[n])]
-        return pd.DataFrame(data)
-
-    schema = ", ".join(["pid long", "rows long"]
-                       + [f"`{n}` binary" for n in names])
-    grouped = partials.withColumn(
-        "_g", (F.col("pid") / F.lit(fanout)).cast("long"))
-    return grouped.groupBy("_g").applyInPandas(fold, schema)
-
-
 def tree_aggregate_multi(partials: DataFrame, names: Sequence[str],
                          collect_max: int = 1024,
                          fanout: int = 64,
                          blob_bytes: int | None = None,
                          est_parts: int | None = None) -> dict[str, bytes | None]:
-    """Merge a multi-sketch partials frame to one blob per sketch name.
+    """Merge a partials frame to one blob per sketch name (``None`` when
+    the frame has no rows).
 
-    Up to ``collect_max`` partials are pulled straight to the driver via the
-    Arrow collect path and folded there (sub-second even for hundreds of
-    MB-scale blobs).  Beyond that — true cluster scale — parallel tree
-    rounds fold ``fanout`` rows into one executor-side first, so the driver
-    only ever sees ``collect_max`` rows.  Folds happen in sorted-pid order
-    at every level (canonical).  ``blob_bytes`` = per-ROW total size hint
-    (sum of the specs' est_bytes()) capping the collect by bytes.
-    ``est_parts`` (when the caller knows the partial count, e.g. it chose
-    the input partitioning) skips the ``.rdd`` partition probe — that
-    conversion runs full plan analysis on the driver, a flat cost worth
-    avoiding in latency-measured paths."""
+    Partials are fixed-size KB-MB sketches, so the dominant cost is the
+    build scan, never the merge — the merge plan only has to avoid fixed
+    overhead.  Up to ``collect_max`` partials are pulled straight to the
+    driver via the Arrow collect path and folded there in sorted-pid order
+    (one job, no extra shuffle; sub-second even for hundreds of MB-scale
+    blobs).  Beyond that — true cluster scale — parallel tree rounds
+    (``groupBy(pid // fanout)`` -> ``applyInPandas`` fold, the
+    treeAggregate pattern expressed over DataFrames so blobs stay in
+    Arrow) fold ``fanout`` rows into one executor-side first, so the
+    driver only ever sees ``collect_max`` rows.  Folds happen in
+    sorted-pid order at every level (canonical for every sketch kind,
+    byte-identical to any other order for the commutative kinds).
+    ``blob_bytes`` = per-ROW total size hint (sum of the specs'
+    est_bytes()) capping the collect by bytes.  ``est_parts`` (when the
+    caller knows the partial count, e.g. it chose the input partitioning)
+    skips the ``.rdd`` partition probe — that conversion runs full plan
+    analysis on the driver, a flat cost worth avoiding in
+    latency-measured paths."""
     collect_max = _budgeted_collect_max(collect_max, blob_bytes)
     if est_parts is None:
         est_parts = partials.rdd.getNumPartitions()
     while est_parts > collect_max:
-        partials = tree_merge_round_multi(partials, names, fanout)
+        partials = tree_merge_round(partials, names, fanout)
         est_parts = int(np.ceil(est_parts / fanout))
     pdf = _collect_partials(partials)
     return {n: merge_blob_list(bytes(b) for b in pdf[n]) for n in names}
@@ -682,6 +611,31 @@ def sketch_dataframe_multi(
         blobs = run(specs, False)
     return {n: specs[n][0].empty() if blobs[n] is None
             else sketch_from_bytes(blobs[n]) for n in specs}
+
+
+# The single-sketch API: the same engine with one sketch named "sketch".
+
+def build_partials(df: DataFrame, spec: SketchSpec,
+                   cols: Sequence[str | Column]) -> DataFrame:
+    """One sketch row per input partition (the map-side combine the pandas
+    UDAF API lacks).  Output: DataFrame[pid, sketch, rows]."""
+    return build_partials_multi(df, {"sketch": (spec, cols)})
+
+
+def tree_aggregate(partials: DataFrame, collect_max: int = 1024,
+                   fanout: int = 64,
+                   blob_bytes: int | None = None) -> bytes | None:
+    """Merge ``[pid, sketch, rows]`` partial rows to one blob (see
+    :func:`tree_aggregate_multi`)."""
+    return tree_aggregate_multi(partials, ["sketch"], collect_max, fanout,
+                                blob_bytes)["sketch"]
+
+
+def sketch_dataframe(df: DataFrame, spec: SketchSpec,
+                     cols: Sequence[str | Column]) -> Sketch:
+    """Build + merge in one call; returns the deserialized final sketch
+    (``spec.empty()`` over zero rows)."""
+    return sketch_dataframe_multi(df, {"sketch": (spec, cols)})["sketch"]
 
 
 # --------------------------------------------------------------------------
@@ -723,16 +677,10 @@ def grouped_sketch(df: DataFrame, group_cols: Sequence[str],
         df.withColumn("_salt", F.pmod(F.xxhash64(*cols), F.lit(salt))),
         cols, keep=[*group_cols, "_salt"])
 
-    def build_salted(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        sk = spec.empty()
-        spec.update(sk, pdf)
-        data = {c: [key[i]] for i, c in enumerate(group_cols)}
-        data["sketch"] = [sk.to_bytes()]
-        data["rows"] = [len(pdf)]
-        return pd.DataFrame(data)
-
+    # build() reads only the leading group values of its key: the trailing
+    # salt value is dropped from the partial rows
     stage1 = salted.groupBy(*group_cols, "_salt").applyInPandas(
-        build_salted, out_schema)
+        build, out_schema)
 
     def merge_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
         blob = merge_blob_list(bytes(b) for b in pdf["sketch"])
@@ -757,7 +705,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
     - **stage 1** (``mapInPandas``, NO shuffle): each input partition
       builds one partial sketch per group it contains, segmented inside the
       Arrow batches — raw rows never leave their partition;
-    - **stage 2** (``groupBy(group).applyInPandas``): only the KB-scale
+    - **stage 2** (``regroup_sketch_rows``): only the KB-scale
       partial-sketch rows shuffle (at most partitions x groups-per-
       partition rows), merged per group — valid because every mergeable
       kind here is associative+commutative.
@@ -807,35 +755,7 @@ def grouped_sketch_segmented(df: DataFrame, group_cols: Sequence[str],
     stage1 = prepared.mapInPandas(build_segmented,
                                   out_schema + ", _pid long")
 
-    def merge_fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: dict[tuple, list] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # rows arrive sorted by (group, _pid) via sortWithinPartitions,
-            # so per-group merge order is deterministic even when a group
-            # spans Arrow batch boundaries
-            for key, sub in pdf.groupby(group_cols, sort=False,
-                                        dropna=False):
-                key = _norm_key(key)
-                ent = acc.get(key)
-                blobs = [bytes(b) for b in sub["sketch"]]
-                if ent is None:
-                    acc[key] = [merge_blob_list(blobs),
-                                int(sub["rows"].sum())]
-                else:
-                    ent[0] = merge_blob_list([ent[0], *blobs])
-                    ent[1] += int(sub["rows"].sum())
-        if acc:
-            keys = sorted(acc, key=_null_last)
-            data = {c: [k[i] for k in keys] for i, c in enumerate(group_cols)}
-            data["sketch"] = [acc[k][0] for k in keys]
-            data["rows"] = [acc[k][1] for k in keys]
-            yield pd.DataFrame(data)
-
-    return (stage1.repartition(*group_cols)
-            .sortWithinPartitions(*group_cols, "_pid")
-            .mapInPandas(merge_fold, out_schema))
+    return regroup_sketch_rows(stage1, group_cols, order_cols=["_pid"])
 
 
 def regroup_sketch_rows(grouped: DataFrame, group_cols: Sequence[str],
@@ -945,24 +865,16 @@ def with_sketch_quantile(df: DataFrame, q: float,
 
 def with_sketch_estimate(df: DataFrame, out_col: str = "estimate",
                          sketch_col: str = "sketch") -> DataFrame:
-    """Adds each row's sketch estimate (distinct count for bottom-k/HLL/
-    bloom, n for KLL/t-digest) as a double — evaluated on the EXECUTORS, so
-    high-cardinality grouped results never ship sketch blobs to the driver
-    just to read one number out of each."""
+    """Adds each row's ``Sketch.estimate()`` (distinct count for bottom-k/
+    HLL/bloom, n for KLL/t-digest; kinds without one raise) as a double —
+    evaluated on the EXECUTORS, so high-cardinality grouped results never
+    ship sketch blobs to the driver just to read one number out of each."""
 
     @F.pandas_udf("double")
     def est(blobs: pd.Series) -> pd.Series:
         out = np.empty(len(blobs), dtype=np.float64)
         for i, b in enumerate(blobs):
-            sk = sketch_from_bytes(bytes(b))
-            if hasattr(sk, "distinct_estimate"):
-                out[i] = float(sk.distinct_estimate())
-            elif hasattr(sk, "estimate"):
-                out[i] = float(sk.estimate())
-            elif hasattr(sk, "estimate_n"):
-                out[i] = float(sk.estimate_n())
-            else:
-                out[i] = float(getattr(sk, "n", float("nan")))
+            out[i] = float(sketch_from_bytes(bytes(b)).estimate())
         return pd.Series(out)
 
     return df.withColumn(out_col, est(F.col(sketch_col)))
@@ -971,19 +883,6 @@ def with_sketch_estimate(df: DataFrame, out_col: str = "estimate",
 # --------------------------------------------------------------------------
 # Scalar sketch functions over DataFrames
 # --------------------------------------------------------------------------
-
-_SKETCH_CACHE: dict[bytes, Sketch] = {}
-
-
-def _cached_sketch(blob: bytes) -> Sketch:
-    sk = _SKETCH_CACHE.get(blob)
-    if sk is None:
-        if len(_SKETCH_CACHE) > 8:
-            _SKETCH_CACHE.clear()
-        sk = sketch_from_bytes(blob)
-        _SKETCH_CACHE[blob] = sk
-    return sk
-
 
 # Large probe blobs ship as Spark broadcasts (one torrent fetch per
 # executor) instead of riding the UDF closure into every task; small ones
@@ -1081,8 +980,7 @@ def with_might_contain(df: DataFrame, blob: bytes,
 
     @F.pandas_udf(BooleanType())
     def probe(h1: pd.Series) -> pd.Series:
-        sk = (_probe_sketch(token, bc, inline) if bc is not None
-              else _cached_sketch(inline))
+        sk = _probe_sketch(token, bc, inline)
         return pd.Series(sk.contains_hashes(h1.to_numpy()))
 
     return df.withColumn(out_col, probe(F.xxhash64(*cols)))
@@ -1102,8 +1000,7 @@ def with_layer_find(df: DataFrame, blob: bytes,
 
     @F.pandas_udf("array<long>")
     def probe(h1: pd.Series) -> pd.Series:
-        sk = (_probe_sketch(token, bc, inline, decode_acc)
-              if bc is not None else _cached_sketch(inline))
+        sk = _probe_sketch(token, bc, inline, decode_acc)
         return pd.Series(sk.find_hashes(h1.to_numpy()))
 
     return df.withColumn(out_col, probe(F.xxhash64(*cols)))
@@ -1270,8 +1167,7 @@ def cms_lookup(df: DataFrame, blob: bytes,
 
     @F.pandas_udf(LongType())
     def probe(h1: pd.Series) -> pd.Series:
-        sk = (_probe_sketch(token, bc, inline) if bc is not None
-              else _cached_sketch(inline))
+        sk = _probe_sketch(token, bc, inline)
         return pd.Series(sk.query_hashes(h1.to_numpy()))
 
     return df.withColumn(out_col, probe(F.xxhash64(*cols)))

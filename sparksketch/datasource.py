@@ -137,12 +137,4 @@ class _SketchViewReader(DataSourceReader):
         for key in sorted(groups, key=repr):
             blobs, nrows = groups[key]
             sk = sketch_from_bytes(merge_blob_list(blobs))
-            if hasattr(sk, "distinct_estimate"):
-                est = float(sk.distinct_estimate())
-            elif hasattr(sk, "estimate"):
-                est = float(sk.estimate())
-            elif hasattr(sk, "estimate_n"):
-                est = float(sk.estimate_n())
-            else:
-                est = float(getattr(sk, "n", float("nan")))
-            yield (*key, est, nrows)
+            yield (*key, float(sk.estimate()), nrows)

@@ -132,3 +132,9 @@ class Sketch:
 
     def to_bytes(self) -> bytes:  # pragma: no cover - interface
         raise NotImplementedError
+
+    def estimate(self) -> float:
+        """The kind's one headline count: distinct items for HLL, bottom-k
+        and the Bloom family, items seen for KLL and t-digest.  Kinds with
+        no single count (CMS, MinHash, layered) raise ``TypeError``."""
+        raise TypeError(f"{type(self).__name__} has no single estimate")

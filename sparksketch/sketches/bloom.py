@@ -94,6 +94,9 @@ class BloomFilter(Sketch):
     def estimate_n(self) -> float:
         return self.shape.estimate_n(self.cardinality())
 
+    def estimate(self) -> float:
+        return self.estimate_n()
+
     def is_full(self) -> bool:
         return self.cardinality() == self.shape.m
 
@@ -162,6 +165,9 @@ class SparseBloomFilter(Sketch):
 
     def estimate_n(self) -> float:
         return self.shape.estimate_n(self.cardinality())
+
+    def estimate(self) -> float:
+        return self.estimate_n()
 
     def contains_indices(self, idx: np.ndarray) -> bool:
         return bool(np.isin(np.asarray(idx, dtype=np.int64), self.indices).all())

@@ -76,6 +76,9 @@ class BottomKSketch(Sketch):
         h_k = float(self.hashes[-1]) / _MAX_U64
         return (self.k - 1) / max(h_k, 1e-300)
 
+    def estimate(self) -> float:
+        return self.distinct_estimate()
+
     def quantile(self, q: float) -> float:
         """Quantile of the payload values from the uniform hash sample.
         NaN payloads (SQL NULLs through the Arrow crossing) are excluded

@@ -177,6 +177,9 @@ class CountingBloomFilter(Sketch):
     def estimate_n(self) -> float:
         return self.shape.estimate_n(self.cardinality())
 
+    def estimate(self) -> float:
+        return self.estimate_n()
+
     def to_bytes(self) -> bytes:
         if self.cell_bits == 64:  # v1 wire bytes, golden-stable
             return (pack_header(self.KIND)

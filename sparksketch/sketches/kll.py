@@ -147,6 +147,10 @@ class KLLSketch(Sketch):
         vx = np.concatenate(([self.min_v], v, [self.max_v]))
         return float(np.interp(q * w.sum(), cum, vx))
 
+    def estimate(self) -> float:
+        """Items seen (the weight the quantiles are taken over)."""
+        return float(self.n)
+
     def quantile(self, q: float) -> float:
         if self.n == 0:
             return float("nan")

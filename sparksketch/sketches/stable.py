@@ -162,6 +162,9 @@ class StableBloomFilter(Sketch):
     def estimate_n(self) -> float:
         return self.shape.estimate_n(self.cardinality())
 
+    def estimate(self) -> float:
+        return self.estimate_n()
+
     def as_index_array(self) -> np.ndarray:
         return np.flatnonzero(self.cells).astype(np.int64)
 

@@ -115,6 +115,10 @@ class TDigest(Sketch):
         self._cluster(np.concatenate([self.means, other.means]),
                       np.concatenate([self.weights, other.weights]))
 
+    def estimate(self) -> float:
+        """Items seen (the weight the quantiles are taken over)."""
+        return float(self.n)
+
     def quantile(self, q: float) -> float:
         if self.n == 0:
             return float("nan")

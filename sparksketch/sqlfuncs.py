@@ -46,15 +46,7 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     def sketch_estimate(blobs: pd.Series) -> pd.Series:
         out = np.empty(len(blobs), dtype=np.float64)
         for sk, idxs in _per_blob_groups(blobs):
-            if hasattr(sk, "distinct_estimate"):
-                v = float(sk.distinct_estimate())
-            elif hasattr(sk, "estimate"):
-                v = float(sk.estimate())
-            elif hasattr(sk, "estimate_n"):
-                v = float(sk.estimate_n())
-            else:
-                v = float(getattr(sk, "n", float("nan")))
-            out[idxs] = v
+            out[idxs] = float(sk.estimate())
         return pd.Series(out)
 
     @F.pandas_udf("double")

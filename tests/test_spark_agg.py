@@ -66,10 +66,8 @@ class TestAssociativity:
         for spec in (KLLSpec(k=200, col="value"),
                      TDigestSpec(compression=100, col="value")):
             part = events.repartition(4, "event_id")
-            b1 = tree_aggregate(build_partials(part, spec, ["event_id"]),
-                                canonical=True)
-            b2 = tree_aggregate(build_partials(part, spec, ["event_id"]),
-                                canonical=True)
+            b1 = tree_aggregate(build_partials(part, spec, ["event_id"]))
+            b2 = tree_aggregate(build_partials(part, spec, ["event_id"]))
             assert b1 == b2
 
 
@@ -100,14 +98,14 @@ class TestEstimates:
     def test_kll_exact_regime_quantiles(self, events):
         n = events.count()
         sk = sketch_dataframe(events, KLLSpec(k=2 * n, col="value"),
-                              ["event_id"], canonical=True)
+                              ["event_id"])
         vals = np.array([r.value for r in events.select("value").collect()])
         for q in (0.25, 0.5, 0.9):
             assert sk.quantile(q) == pytest.approx(np.quantile(vals, q), rel=1e-9)
 
     def test_tdigest_bound(self, events):
         sk = sketch_dataframe(events, TDigestSpec(compression=100, col="value"),
-                              ["event_id"], canonical=True)
+                              ["event_id"])
         vals = np.array([r.value for r in events.select("value").collect()])
         for q in (0.1, 0.5, 0.9):
             true_rank = (vals <= sk.quantile(q)).mean()
